@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -220,6 +221,19 @@ def _headline_passes(
     return totals
 
 
+def _round_benches(repo: Path) -> list[Path]:
+    """The per-round ``BENCH_r<NN>.json`` artifacts, oldest round first.
+    Variants such as ``BENCH_r15_c8.json`` (a run at another core count)
+    are not round records: a plain name sort put them last, because
+    ``.`` sorts before ``_``."""
+    rounds = [
+        (int(m.group(1)), f)
+        for f in repo.glob("BENCH_r*.json")
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f.name))
+    ]
+    return [f for _, f in sorted(rounds)]
+
+
 def _previous_round_ref(repo: Path) -> str | None:
     """The previous round's HEAD: the parent of the commit that added the
     newest TRACKED BENCH_r*.json (the driver commits each round's
@@ -232,7 +246,7 @@ def _previous_round_ref(repo: Path) -> str | None:
     was detected."""
     import subprocess
 
-    for bench in sorted(repo.glob("BENCH_r*.json"), reverse=True):
+    for bench in reversed(_round_benches(repo)):
         out = subprocess.run(
             ["git", "-C", str(repo), "log", "-n1", "--format=%H", "--",
              bench.name],
@@ -357,7 +371,7 @@ def main() -> None:
             else _previous_round_ref(repo)
         )
     elif not os.environ.get("BENCH_NO_DIFFERENTIAL"):
-        prev_files = sorted(repo.glob("BENCH_r*.json"))
+        prev_files = _round_benches(repo)
         if prev_files:
             prev = json.loads(prev_files[-1].read_text())
             prev_med = prev.get("headline_pass_median", prev.get("value"))

@@ -1,17 +1,17 @@
-"""Round-14 measurement harness (optimization guide §1: measure first).
+"""Per-query measurement harness (optimization guide §1: measure first).
 
 For every query named on the command line (default: bench.py's HEADLINE +
 HEAVY_TAIL), builds the DataFrame once, captures ``explain("formatted")``
-to ``plans/r15/<name>_<tag>.txt``, then times it with the noop sink
+to ``<out_dir>/<name>_<tag>.txt``, then times it with the noop sink
 (guide §1.4 — computes every column, no driver materialization) AND with
 ``toPandas()`` (the bench's timed action, kept for comparability), and
 counts Spark jobs/stages per run via the status tracker.
 
 Usage:
-    python scripts/profile_r15.py [--tag before|after] [--runs 3] [name ...]
+    python scripts/profile.py <out_dir> [--tag before|after] [--runs 3] [name ...]
 
-Writes one JSON line per query to stdout and a summary to
-``plans/r15/profile_<tag>.json``.
+e.g. ``python scripts/profile.py plans/current --tag before``. Writes one JSON
+line per query to stdout and a summary to ``<out_dir>/profile_<tag>.json``.
 """
 
 from __future__ import annotations
@@ -22,13 +22,18 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+# sys.path[0] is scripts/, where this file would shadow the stdlib
+# ``profile`` module that cProfile (imported by pyspark) needs
+sys.path[0] = str(Path(__file__).resolve().parent.parent)
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
-    args = sys.argv[1:]
+    if len(sys.argv) < 2 or sys.argv[1].startswith("--"):
+        sys.exit(__doc__)
+    plans_dir = Path(sys.argv[1]).resolve()
+    args = sys.argv[2:]
     tag = "before"
     runs = 3
     if "--tag" in args:
@@ -47,9 +52,8 @@ def main() -> None:
     names = args or (_bench.HEADLINE + _bench.HEAVY_TAIL)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    spark = get_spark("profile_r15")
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r15"
     plans_dir.mkdir(parents=True, exist_ok=True)
 
     tracker = spark.sparkContext.statusTracker()

@@ -125,6 +125,132 @@ def test_backtest_coverage_reasonable(seed):
     assert cov >= 0.5
 
 
+def _backtest_one_series(ds, y, cutoffs, horizon):
+    """Per-fold reference: one scalar fit per cutoff, scored by merging
+    the forecast with the series' actuals on ds."""
+    rows = []
+    for co in cutoffs:
+        co = np.datetime64(co, "us")
+        train = ds <= co
+        if train.sum() < 5:
+            continue
+        fc = fit_forecast_series(ds[train], y[train], horizon)
+        m = fc.merge(pd.DataFrame({"ds": ds, "y": y}), on="ds", how="inner")
+        if m.empty:
+            continue
+        err = m["y"] - m["yhat"]
+        rows.append(
+            {
+                "cutoff": pd.Timestamp(co),
+                "n_test": len(m),
+                "mae": float(err.abs().mean()),
+                "rmse": float(np.sqrt((err**2).mean())),
+                "coverage": float(
+                    ((m["y"] >= m["yhat_lower"]) & (m["y"] <= m["yhat_upper"]))
+                    .mean()
+                ),
+            }
+        )
+    return rows
+
+
+def test_backtest_matches_per_series_folds(spark):
+    """Fold-batched backtest (shared cohort solve + one scoring join) ≡
+    one scalar fit and one merge per (series, cutoff), on the edge cases
+    of the fold rules: NaN history, NaN and all-NaN test windows, too
+    little history, a series starting after a cutoff, unobserved test
+    windows, several cohorts, a two-column key, and series straddling
+    Arrow batches."""
+    from time_series_spark_spark.operators.forecast import backtest
+
+    rng = np.random.default_rng(11)
+    cutoffs = ["2020-04-09", "2020-05-19", "2020-06-08"]
+    horizon = 14
+    c0, c1, c2 = (np.datetime64(c, "us") for c in cutoffs)
+    day = np.timedelta64(1, "D")
+
+    def series(start, n):
+        ds = np.datetime64(start, "us") + day * np.arange(n)
+        t = np.arange(n)
+        y = 50 + 0.1 * t + 4 * np.sin(2 * np.pi * t / 7) + rng.normal(0, 1, n)
+        return ds, y.round(3)
+
+    cases = {}
+    for store, item, start in [  # two same-start cohorts of clean series
+        ("s1", 1, "2020-01-01"), ("s1", 2, "2020-01-01"),
+        ("s2", 1, "2020-02-01"), ("s2", 2, "2020-02-01"),
+    ]:
+        cases[store, item] = series(start, 180)
+    ds, y = series("2020-01-01", 180)
+    y[[10, 40, 41, 90]] = np.nan  # NaN in every training prefix
+    cases["nan", 1] = ds, y
+    ds, y = series("2020-01-01", 180)
+    y[(ds > c0) & (ds <= c0 + 5 * day)] = np.nan  # NaN in one test window
+    y[(ds > c1) & (ds <= c1 + horizon * day)] = np.nan  # all-NaN window
+    y[(ds > c2 - 3 * day) & (ds <= c2)] = np.nan  # history ends in NaN
+    cases["nan", 2] = ds, y
+    cases["short", 1] = series("2020-04-06", 100)  # 4 rows before c0
+    cases["late", 1] = series("2020-04-20", 90)  # starts after c0
+    ds, y = series("2020-01-01", 180)
+    keep = (ds <= c1) | (ds > c1 + horizon * day)  # unobserved test window
+    cases["gap", 1] = ds[keep], y[keep]
+    ds, y = series("2020-04-01", 60)
+    y[:12] = np.nan  # history all NaN at c0 (>= 5 rows, nothing to fit)
+    cases["allnan", 1] = ds, y
+
+    pdf = pd.concat(
+        [
+            pd.DataFrame({"store": s, "item": i, "ds": ds, "y": y})
+            for (s, i), (ds, y) in cases.items()
+        ],
+        ignore_index=True,
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "97")  # every series spans several Arrow batches
+    try:
+        got = (
+            backtest(
+                spark.createDataFrame(pdf), ["store", "item"], "ds", "y",
+                cutoffs, horizon=horizon,
+            )
+            .toPandas()
+            .sort_values(["store", "item", "cutoff"])
+            .reset_index(drop=True)
+        )
+    finally:
+        spark.conf.set(conf, prev)
+
+    ref = pd.DataFrame(
+        [
+            {"store": s, "item": i, **r}
+            for (s, i), (ds, y) in sorted(cases.items())
+            for r in _backtest_one_series(ds, y, cutoffs, horizon)
+        ]
+    )
+    assert list(got.columns) == list(ref.columns)
+    pd.testing.assert_frame_equal(
+        got[["store", "item", "cutoff", "n_test"]],
+        ref[["store", "item", "cutoff", "n_test"]],
+        check_dtype=False,
+    )
+    for c in ["mae", "rmse", "coverage"]:
+        np.testing.assert_allclose(
+            np.round(got[c].to_numpy(dtype=float), 4),
+            np.round(ref[c].to_numpy(dtype=float), 4),
+            rtol=0, atol=1.5e-4, err_msg=c,
+        )
+    # the edge cases are present: skipped folds and NaN-only scores
+    folds = set(zip(got["store"], got["item"], got["cutoff"]))
+    assert ("short", 1, pd.Timestamp(c0)) not in folds
+    assert ("late", 1, pd.Timestamp(c0)) not in folds
+    assert ("gap", 1, pd.Timestamp(c1)) not in folds
+    assert ("allnan", 1, pd.Timestamp(c0)) not in folds
+    nan2 = got[(got["store"] == "nan") & (got["item"] == 2)]
+    assert nan2["mae"].isna().sum() == 1 and (nan2["n_test"] >= horizon).all()
+    assert len(set(zip(got["store"], got["item"]))) == len(cases)
+
+
 @given(
     a_weekly=st.floats(2.0, 10.0),
     a_yearly=st.floats(5.0, 20.0),

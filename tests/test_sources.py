@@ -551,7 +551,7 @@ def test_manifest_publish_put_if_absent(spark, tmp_path):
             {"version": 0, "files": []}, "_manifest.0.json", if_absent=True
         )
     assert tfs.read_json("_manifest.0.json") == committed  # untouched
-    assert not tfs.exists("_manifest.0.json.tmp")  # loser's tmp cleaned
+    assert not list((tmp_path / "vt").glob("*.tmp"))  # loser's tmp cleaned
     assert read_versioned(spark, table).count() == 5
     # non-local branch: same contract through a SubTreeFileSystem
     sub = TableFS(
@@ -567,8 +567,35 @@ def test_manifest_publish_put_if_absent(spark, tmp_path):
         sub.write_json_atomic(
             {"version": 0}, "_manifest.0.json", if_absent=True
         )
-    assert not sub.exists("_manifest.0.json.tmp")
+    assert not list((tmp_path / "vt2").glob("*.tmp"))
 
+
+
+def test_manifest_publish_race_inside_publish_window(tmp_path, monkeypatch):
+    """A rival writer publishing the same version between this writer's
+    temp-file write and its link(2): this writer still loses with
+    FileExistsError, the rival's manifest stands, and no temp file of
+    either writer survives (racing writers never share a temp file)."""
+    import os
+
+    import pytest as _pytest
+
+    from time_series_spark_spark.sources.fsio import as_table_fs
+
+    tfs = as_table_fs(str(tmp_path / "vt"))
+    tfs.mkdirs()
+    real_link = os.link
+
+    def rival_then_link(src, dst):
+        monkeypatch.setattr(os, "link", real_link)
+        tfs.write_json_atomic({"w": "rival"}, "_manifest.0.json", if_absent=True)
+        real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", rival_then_link)
+    with _pytest.raises(FileExistsError, match="concurrent commit"):
+        tfs.write_json_atomic({"w": "me"}, "_manifest.0.json", if_absent=True)
+    assert tfs.read_json("_manifest.0.json") == {"w": "rival"}
+    assert not list((tmp_path / "vt").glob("*.tmp"))
 
 def test_compact_versioned_zorder_preserves_and_prunes(spark, tmp_path):
     """A9 ∘ A17b (round 12): OPTIMIZE ZORDER rewrites the snapshot in

@@ -15,11 +15,19 @@ then the numpy fit runs in Python workers over *packed* Arrow batches
 (``operators/packed.py``) — thousands of complete series share one UDF
 invocation instead of one applyInPandas round trip per series, which
 dominated wall time on wide workloads (1 500 one-user series at sf0.1:
-9.5 s → ~1 s). The UDF is an optimization barrier: callers must
-filter/project *before* calling (§4.3). At 100 TB the shuffle
-partitioning tracks series count; a hot series should be horizon-split
-or salted upstream — the fit itself is O(n·p²) per series and
-embarrassingly parallel across series.
+9.5 s → ~1 s). Inside a batch, every fit goes through one cohort core
+(``_fit_series_cohorts``): series on an identical observation grid share
+ONE multi-right-hand-side ridge solve, because ``XᵀX`` depends only on
+the grid; ragged, NaN-bearing or short series take the scalar path.
+:func:`backtest` feeds the same core one series per (series, cutoff)
+training prefix, so every same-start prefix of a cutoff shares one
+factorization and all folds are scored in one vectorized join
+(1 500 series × 3 cutoffs, one thread: 20 s → 1.5 s of batch compute).
+The UDF is an optimization barrier: callers must filter/project
+*before* calling (§4.3). At 100 TB the shuffle partitioning tracks
+series count; a hot series should be horizon-split or salted upstream —
+the fit itself is O(n·p²) per series and embarrassingly parallel across
+series.
 """
 
 from __future__ import annotations
@@ -389,14 +397,19 @@ def _fit_series_cohorts(
     return pd.concat(outs, ignore_index=True)
 
 
-def _forecast_schema(df: DataFrame, keys: list[str]) -> str:
-    key_schema = ", ".join(
+def _key_schema(df: DataFrame, keys: list[str]) -> str:
+    """DDL of ``df``'s key columns, in ``df``'s column order — the
+    leading part of every per-series operator's output schema."""
+    return ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.schema.fields
         if f.name in keys
     )
+
+
+def _forecast_schema(df: DataFrame, keys: list[str]) -> str:
     return (
-        f"{key_schema}, ds timestamp, yhat double, "
+        f"{_key_schema(df, keys)}, ds timestamp, yhat double, "
         "yhat_lower double, yhat_upper double"
     )
 
@@ -543,69 +556,96 @@ def backtest(
     """F8: rolling-origin cross-validation.
 
     For each cutoff, fit on history ``ds <= cutoff`` and score the next
-    ``horizon`` steps against held-out actuals. All folds for one series
-    run locally inside a single grouped-map call — one shuffle total,
-    fold-looping is executor-local (cheaper than one Spark job per fold);
-    series are packed many-per-Arrow-batch like :func:`forecast`.
+    ``horizon`` steps against the actuals observed on those days. A fold
+    is skipped when fewer than 5 rows (NaN rows included) fall at or
+    before the cutoff, or when no forecast day is observed.
 
-    Output: one row per (series, cutoff) with MAE/RMSE/coverage.
+    Fold-batched: within a packed batch every (series, cutoff) training
+    prefix is one series tagged by its fold and goes through the same
+    cohort core as :func:`forecast`, so same-grid prefixes (same start,
+    same cutoff, no gaps) share ONE multi-RHS solve — ``XᵀX`` depends
+    only on the grid — and ragged, NaN-bearing or short prefixes take the
+    scalar path. All folds are then scored in one vectorized pass: one
+    join of the stacked forecasts with the batch's actuals on
+    (series, ds), one aggregation per fold. One shuffle total.
+
+    Output: one row per (series, cutoff) with ``n_test`` (observed
+    forecast days, NaN ``y`` included), NaN-skipping MAE/RMSE, and
+    interval coverage (a NaN ``y`` counts as not covered).
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     schema = (
-        f"{key_schema}, cutoff timestamp, n_test bigint, mae double, "
-        "rmse double, coverage double"
+        f"{_key_schema(df, keys)}, cutoff timestamp, n_test bigint, "
+        "mae double, rmse double, coverage double"
     )
-    cutoff_ts = [np.datetime64(c) for c in cutoffs]
-
-    def _bt_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = pdf[ds_col].to_numpy().astype("datetime64[us]")
-        y = pdf[y_col].to_numpy().astype(float)
-        rows = []
-        for co in cutoff_ts:
-            train = ds <= co
-            if train.sum() < 5:
-                continue
-            fc = fit_forecast_series(
-                ds[train], y[train], horizon, freq_days, **fit_kwargs
-            )
-            merged = fc.merge(
-                pd.DataFrame({"ds": ds, "y": y}), on="ds", how="inner"
-            )
-            if merged.empty:
-                continue
-            err = merged["y"] - merged["yhat"]
-            rows.append(
-                {
-                    "cutoff": pd.Timestamp(co),
-                    "n_test": len(merged),
-                    "mae": float(err.abs().mean()),
-                    "rmse": float(np.sqrt((err**2).mean())),
-                    "coverage": float(
-                        (
-                            (merged["y"] >= merged["yhat_lower"])
-                            & (merged["y"] <= merged["yhat_upper"])
-                        ).mean()
-                    ),
-                }
-            )
-        return pd.DataFrame(
-            rows, columns=["cutoff", "n_test", "mae", "rmse", "coverage"]
-        )
+    out_cols = [*keys, "cutoff", "n_test", "mae", "rmse", "coverage"]
+    cutoff_ts = np.array([np.datetime64(c, "us") for c in cutoffs])
 
     def _bt_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            out = _bt_one(g)
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(out[[*keys, "cutoff", "n_test", "mae", "rmse", "coverage"]])
-        return pd.concat(outs, ignore_index=True)
+        from time_series_spark_spark.operators.packed import key_slices
+
+        # a null key never formed a series (pandas groupby drops it) and
+        # a null ds is neither history nor a test day
+        pdf = pdf.dropna(subset=[*keys, ds_col])
+        starts, ends = key_slices(pdf, keys)
+        ds_all = pdf[ds_col].to_numpy().astype("datetime64[us]")
+        y_all = pdf[y_col].to_numpy(dtype=float)
+        # ds ascends within a series (packed sort), so the history
+        # ``ds <= cutoff`` is a row prefix: n_tr[i, j] rows of series i
+        n_tr = np.array(
+            [np.searchsorted(ds_all[s:e], cutoff_ts, "right")
+             for s, e in zip(starts, ends)],
+            dtype=np.int64,
+        ).reshape(len(starts), len(cutoff_ts))
+        f_series, f_cut = np.nonzero(n_tr >= 5)  # series-major fold order
+        if not len(f_series):
+            return pd.DataFrame(columns=out_cols)
+
+        def _prefixes():
+            for f, (i, j) in enumerate(zip(f_series, f_cut)):
+                s = starts[i]
+                e = s + n_tr[i, j]
+                yield (f,), ds_all[s:e], y_all[s:e]
+
+        fc = _fit_series_cohorts(
+            _prefixes(), ["__fold"], horizon, freq_days, fit_kwargs
+        )
+        fc["__series"] = f_series[fc["__fold"].to_numpy()]
+        actual = pd.DataFrame(
+            {
+                "__series": np.repeat(np.arange(len(starts)), ends - starts),
+                "ds": ds_all,
+                "y": y_all,
+            }
+        )
+        m = fc.merge(actual, on=["__series", "ds"], how="inner")
+        fold = m["__fold"].to_numpy()
+        y = m["y"].to_numpy()
+        err = y - m["yhat"].to_numpy()
+        obs = ~np.isnan(err)
+        covered = (y >= m["yhat_lower"].to_numpy()) & (
+            y <= m["yhat_upper"].to_numpy()
+        )
+        n_folds = len(f_series)
+        n_test = np.bincount(fold, minlength=n_folds)
+        n_cov = np.bincount(fold, weights=covered, minlength=n_folds)
+        fold_obs, err_obs = fold[obs], err[obs]
+        n_obs = np.bincount(fold_obs, minlength=n_folds)
+        abs_sum = np.bincount(fold_obs, np.abs(err_obs), minlength=n_folds)
+        sq_sum = np.bincount(fold_obs, err_obs**2, minlength=n_folds)
+        keep = n_test > 0
+        with np.errstate(invalid="ignore", divide="ignore"):
+            mae = abs_sum / n_obs  # 0/0 → NaN: every test day is NaN
+            rmse = np.sqrt(sq_sum / n_obs)
+        first_row = starts[f_series[keep]]
+        out = {k: pdf[k].to_numpy()[first_row] for k in keys}
+        out.update(
+            cutoff=cutoff_ts[f_cut[keep]],
+            n_test=n_test[keep],
+            mae=mae[keep],
+            rmse=rmse[keep],
+            coverage=n_cov[keep] / n_test[keep],
+        )
+        return pd.DataFrame(out, columns=out_cols)
 
     slim = df.select(*keys, ds_col, y_col)
     return packed_grouped_map(slim, keys, [ds_col], _bt_batch, schema)
@@ -687,11 +727,6 @@ def holt_winters(
 
     Output: ``keys…, ds timestamp, yhat double, sse double``.
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     step = np.timedelta64(int(freq_days * 86_400_000_000), "us")
 
     def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -723,7 +758,7 @@ def holt_winters(
         keys,
         [ds_col],
         _fit_batch,
-        f"{key_schema}, ds timestamp, yhat double, sse double",
+        f"{_key_schema(df, keys)}, ds timestamp, yhat double, sse double",
     )
 
 
@@ -749,11 +784,6 @@ def model_selection(
 
     Output: ``keys…, n_folds, mae_additive, mae_hw, champion``.
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     cutoff_ts = [np.datetime64(c) for c in cutoffs]
     step = np.timedelta64(int(freq_days * 86_400_000_000), "us")
 
@@ -816,8 +846,8 @@ def model_selection(
         keys,
         [ds_col],
         _batch,
-        f"{key_schema}, n_folds long, mae_additive double, mae_hw double, "
-        "champion string",
+        f"{_key_schema(df, keys)}, n_folds long, mae_additive double, "
+        "mae_hw double, champion string",
     )
 
 
@@ -844,11 +874,6 @@ def conformal_forecast(
 
     Output: ``keys…, ds, yhat, lo, hi, qhat`` (one qhat per series).
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
 
     def _one(pdf: pd.DataFrame) -> pd.DataFrame:
         ds = pdf[ds_col].to_numpy().astype("datetime64[us]")
@@ -897,8 +922,8 @@ def conformal_forecast(
         keys,
         [ds_col],
         _batch,
-        f"{key_schema}, ds timestamp, yhat double, lo double, hi double, "
-        "qhat double",
+        f"{_key_schema(df, keys)}, ds timestamp, yhat double, lo double, "
+        "hi double, qhat double",
     )
 
 
@@ -950,11 +975,6 @@ def theta_forecast(
     shuffle shape: one hash partitioning by key, thousands of series per
     Arrow batch, O(n·|grid|) numpy per series). Short series skipped.
     Output: ``keys…, ds timestamp, yhat double, alpha double``."""
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     step = np.timedelta64(int(freq_days * 86_400_000_000), "us")
 
     def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -983,7 +1003,7 @@ def theta_forecast(
         keys,
         [ds_col],
         _fit_batch,
-        f"{key_schema}, ds timestamp, yhat double, alpha double",
+        f"{_key_schema(df, keys)}, ds timestamp, yhat double, alpha double",
     )
 
 
@@ -1033,11 +1053,6 @@ def croston_forecast(
     half-ties (…5 at the next digit) that different engines break
     differently (round-half-even vs half-away) — the round-13 lesson
     from this query's oracle upgrade."""
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
 
     def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         rnd = (
@@ -1069,6 +1084,6 @@ def croston_forecast(
         keys,
         [ds_col],
         _fit_batch,
-        f"{key_schema}, n_periods long, n_demands long, demand_rate double, "
-        "z_hat double, p_hat double",
+        f"{_key_schema(df, keys)}, n_periods long, n_demands long, "
+        "demand_rate double, z_hat double, p_hat double",
     )

@@ -359,6 +359,8 @@ _EXTERNALLY_CONFIRMED = [
     # spark_rows > 0; seventh consecutive zero-failure window). The two
     # round-13 registrations were hash-green on first exposure:
     "orders_versioned_merge_evolve", "stream_optimize_skip_feed",
+    # round-14 external greens (CORRECTNESS_r14.json):
+    "orders_versioned_constraints_report", "orders_versioned_mor_roundtrip",
 ]
 
 # Queries pinned to the very front of the sample window: externally-failed

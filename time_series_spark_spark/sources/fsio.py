@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import posixpath
 import re
+import uuid
 
 
 class TableFS:
@@ -105,10 +106,11 @@ class TableFS:
     def write_json_atomic(
         self, obj: dict, *rel: str, if_absent: bool = False
     ) -> None:
-        """Publish a small JSON file atomically: write ``<name>.tmp`` then
-        move over the final name — rename(2) on local/HDFS (atomic; the
-        commit protocol), copy-delete on object stores (NOT atomic there:
-        swap in a conditional put, see module docstring).
+        """Publish a small JSON file atomically: write a temp file named
+        per writer (``<name>.<uuid>.tmp``), then move it over the final
+        name — rename(2) on local/HDFS (atomic; the commit protocol),
+        copy-delete on object stores (NOT atomic there: swap in a
+        conditional put, see module docstring).
 
         ``if_absent=True`` is the PUT-IF-ABSENT the commit log needs
         (Delta's LogStore contract): two writers racing to publish the
@@ -124,7 +126,9 @@ class TableFS:
         from pyarrow import fs as pafs
 
         final = self.path(*rel)
-        tmp = final + ".tmp"
+        # one temp name per writer: writers racing for one version must
+        # not truncate, link or delete each other's temp file
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
         with self.fs.open_output_stream(tmp) as f:
             f.write(json.dumps(obj).encode("utf-8"))
         if not if_absent:
