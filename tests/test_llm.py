@@ -294,6 +294,38 @@ def test_multimodal_features_deterministic_schema(spark, docs):
     assert sorted(map(str, rows)) == sorted(map(str, rows2))
 
 
+def _ivf_reference(emb, n_clusters, n_probe, seed=42):
+    """Brute-force IVF geometry for ``ivf_topk``'s coarse quantizer: a
+    vector's cell by full squared distance to every centroid, and a
+    query's ``n_probe`` cells by cosine to every centroid (ties to the
+    lower cell), both computed in numpy outside Spark."""
+    from time_series_spark_spark.functions.vectors import unit_normalize
+    from time_series_spark_spark.operators import llm
+
+    cent = llm._lloyd(
+        llm._unit_sample(emb, "vec_id", "embedding", llm._IVF_SAMPLE),
+        n_clusters,
+        llm._IVF_ITERS,
+        np.random.default_rng(seed),
+    )
+    uv = {
+        r.vec_id: np.asarray(r.uv)
+        for r in emb.select(
+            "vec_id", unit_normalize("embedding").alias("uv")
+        ).collect()
+    }
+
+    def cell(vec_id):
+        return int(((uv[vec_id][None, :] - cent) ** 2).sum(axis=1).argmin())
+
+    def probed(vec_id):
+        v = uv[vec_id]
+        c_cos = cent @ v / (np.linalg.norm(cent, axis=1) * np.linalg.norm(v))
+        return set(np.argsort(-c_cos, kind="stable")[:n_probe].tolist())
+
+    return cell, probed
+
+
 def test_ivf_topk_recall_and_shape(spark):
     """IVF ANN: recall@5 vs exact brute force, plus exactness inside the
     probed region — the reranked cosines must equal the exact ones for
@@ -309,6 +341,7 @@ def test_ivf_topk_recall_and_shape(spark):
 
     approx = ivf_topk(emb, k=5, n_queries=10, n_clusters=16, n_probe=6)
     rows = approx.collect()
+    nearest_cell, probed_cells = _ivf_reference(emb, 16, 6)
     approx_sets = {}
     for r in rows:
         approx_sets.setdefault(r.query_id, set()).add(r.cand_id)
@@ -321,6 +354,24 @@ def test_ivf_topk_recall_and_shape(spark):
     ]
     assert float(np.mean(recalls)) >= 0.5  # near-orthogonal 64-d vectors
     assert all(len(s) == 5 for s in approx_sets.values())
+    assert all(
+        nearest_cell(r.cand_id) in probed_cells(r.query_id)
+        for r in rows
+    ), "a returned candidate's brute-force nearest centroid was not probed"
+
+
+def test_ivf_topk_encodes_corpus_once(spark):
+    """The corpus passes through the cell-encode Arrow stage exactly once:
+    the join on ``cell`` must not push an inferred ``isnotnull`` filter
+    below the projection as a second encode, and the probe branch encodes
+    nothing."""
+    from time_series_spark_spark.operators.llm import ivf_topk
+
+    approx = ivf_topk(load(spark, SF, "embeddings"), k=5, n_queries=10)
+    approx.collect()
+    plan = approx._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
 
 
 def test_stratified_sample_proportions_and_determinism(spark):
@@ -702,6 +753,81 @@ def test_pq_codebooks_deterministic_and_shaped(spark):
     b2 = pq_train_codebooks(emb, m=8, nbits=4, sample_n=200)
     assert b1.shape == (8, 16, 8)
     assert (b1 == b2).all()  # seeded init + fixed iters → bit-identical
+
+
+def _pq_codebooks_reference(emb, m, nbits, sample_n=2000, iters=12, seed=42):
+    """Lloyd's k-means per subspace as one masked mean per centroid — the
+    per-centroid loop the vectorized kernel replaced, kept as its pin."""
+    from time_series_spark_spark.functions.vectors import unit_normalize
+
+    rows = (
+        emb.select(F.col("vec_id").alias("id"), unit_normalize("embedding").alias("uv"))
+        .orderBy("id")
+        .limit(sample_n)
+        .collect()
+    )
+    X = np.asarray([r["uv"] for r in rows], dtype=np.float64)
+    n, dim = X.shape
+    dsub, ksub = dim // m, 1 << nbits
+    rng = np.random.default_rng(seed)
+    books = np.empty((m, ksub, dsub))
+    for j in range(m):
+        sub = X[:, j * dsub : (j + 1) * dsub]
+        cent = sub[rng.permutation(n)[:ksub]].copy()
+        for _ in range(iters):
+            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+            assign = d2.argmin(axis=1)
+            for c in range(ksub):
+                mask = assign == c
+                if mask.any():
+                    cent[c] = sub[mask].mean(axis=0)
+        books[j] = cent
+    return books
+
+
+@pytest.mark.parametrize("nbits", [4, 8])
+def test_pq_codebooks_match_per_centroid_loop(spark, nbits):
+    from time_series_spark_spark.operators.llm import pq_train_codebooks
+
+    emb = load(spark, SF, "embeddings")
+    books = pq_train_codebooks(emb, m=8, nbits=nbits)
+    assert np.array_equal(books, _pq_codebooks_reference(emb, 8, nbits))
+
+
+def test_pq_topk_honours_id_col(spark):
+    from time_series_spark_spark.operators.llm import pq_topk
+
+    emb = load(spark, SF, "embeddings")
+    renamed = emb.withColumnRenamed("vec_id", "other")
+    got = pq_topk(renamed, id_col="other", k=5, n_queries=10).collect()
+    want = pq_topk(emb, k=5, n_queries=10).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_ann_registry_queries_retrain_after_overwrite(spark, tmp_path):
+    """A table rewritten at the same path must not be served by the
+    previous table's quantizers: after overwriting embeddings A with B,
+    ``emb_pq_topk`` and ``emb_ivf_topk`` must answer as on B alone."""
+    from time_series_spark_spark.queries import REGISTRY
+
+    names = ["emb_pq_topk", "emb_ivf_topk"]
+
+    def run(sf_dir):
+        return {
+            n: sorted(map(tuple, REGISTRY[n].fn(spark, sf_dir).collect()))
+            for n in names
+        }
+
+    a = load(spark, SF, "embeddings")
+    b = load(spark, SF.replace("sf0.01", "sf0.001"), "embeddings")
+    shared, alone = str(tmp_path / "shared"), str(tmp_path / "alone")
+    a.write.parquet(f"{shared}/embeddings.parquet")
+    on_a = run(shared)
+    b.write.mode("overwrite").parquet(f"{shared}/embeddings.parquet")
+    b.write.parquet(f"{alone}/embeddings.parquet")
+    on_b, on_b_alone = run(shared), run(alone)
+    assert on_b == on_b_alone
+    assert on_b != on_a
 
 
 def test_pq_encode_codes_in_range(spark):

@@ -1625,7 +1625,50 @@ def extract_multimodal_features(
 # K3: IVF (inverted-file) approximate nearest neighbors — the second scale
 # path alongside BRP-LSH
 # --------------------------------------------------------------------------
-_IVF_QUANTIZERS: dict[str, object] = {}
+_IVF_SAMPLE = 2000  # coarse-quantizer training sample (first ids)
+_IVF_ITERS = 20  # Lloyd rounds for the coarse quantizer
+
+
+def _nearest(X: "np.ndarray", cent: "np.ndarray") -> "np.ndarray":
+    """Index of each row's nearest centroid. ||x - c||² = ||x||² - 2<x,c>
+    + ||c||², and the row-constant ||x||² drops out of the argmin; ties go
+    to the lowest index."""
+    return ((cent**2).sum(axis=1) - 2.0 * (X @ cent.T)).argmin(axis=1)
+
+
+def _lloyd(
+    X: "np.ndarray", k: int, iters: int, rng: "np.random.Generator"
+) -> "np.ndarray":
+    """Lloyd's k-means over the rows of ``X``: the one kernel behind both
+    ANN quantizers (PQ subspace codebooks, IVF coarse cells). Starts from
+    the first ``k`` rows under a permutation drawn from ``rng``, then runs
+    exactly ``iters`` rounds of :func:`_nearest` assignment and mean
+    update. Rows are summed in row order, so each mean equals a per-cell
+    ``mean``; an empty cell keeps its centroid."""
+    cent = X[rng.permutation(len(X))[:k]].copy()
+    for _ in range(iters):
+        cell = _nearest(X, cent)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, cell, X)
+        counts = np.bincount(cell, minlength=len(cent))
+        hit = counts > 0
+        cent[hit] = sums[hit] / counts[hit, None]
+    return cent
+
+
+def _unit_sample(df: DataFrame, id_col: str, vec_col: str, sample_n: int):
+    """The quantizer training sample: the unit-normalized vectors of the
+    first ``sample_n`` ids, in id order, read to the driver in one bounded
+    collect."""
+    from time_series_spark_spark.functions.vectors import unit_normalize
+
+    rows = (
+        df.select(F.col(id_col).alias("id"), unit_normalize(vec_col).alias("uv"))
+        .orderBy("id")
+        .limit(sample_n)
+        .collect()
+    )
+    return np.asarray([r["uv"] for r in rows], dtype=np.float64)
 
 
 def ivf_topk(
@@ -1637,56 +1680,44 @@ def ivf_topk(
     n_clusters: int = 16,
     n_probe: int = 4,
     seed: int = 42,
-    quantizer_key: str | None = None,
 ) -> DataFrame:
-    """IVF ANN: KMeans coarse quantizer → per-query probe of the ``n_probe``
+    """IVF ANN: coarse quantizer → per-query probe of the ``n_probe``
     nearest cells → exact cosine rerank inside the probed cells only.
 
-    100 TB shape: the corpus is scanned once to assign cells (one narrow
-    shuffle-free ``transform``), the probe list (queries × n_probe rows) is
+    The coarse quantizer is :func:`_lloyd` with ``n_clusters`` centroids
+    on the PQ training sample (first 2000 ids, unit-normalized, one
+    collect); every corpus vector's cell is its :func:`pq_encode` code
+    under those centroids as a one-subspace codebook, so IVF is the m=1
+    case of PQ. Training is refit per call and cached nowhere.
+
+    100 TB shape: the corpus is scanned once to assign cells (one narrow,
+    shuffle-free Arrow stage), the probe list (queries × n_probe rows) is
     broadcast, and the rerank join touches ~``n_probe/n_clusters`` of the
-    corpus instead of all of it. Everything driver-side is O(n_clusters ×
-    dim) — centroids only; no per-query driver loop.
-
-    ``quantizer_key``: at scale the coarse quantizer is a STORED ARTIFACT —
-    fit once when the index is built, reused by every query run (KMeans
-    refitting was ~80% of this operator's wall time when refit per
-    invocation). Passing a key caches the fitted model in-process under
-    that key; callers must change the key when the underlying corpus
-    changes (the registered query keys by sf_dir).
+    corpus instead of all of it. Everything driver-side is bounded: the
+    training sample and the centroids; no per-query driver loop.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     from time_series_spark_spark.functions.vectors import unit_normalize
 
-    unit = df.select(
-        id_col, unit_normalize(vec_col).alias("uv")
-    ).withColumn("v", array_to_vector("uv"))
-    model = _IVF_QUANTIZERS.get(quantizer_key) if quantizer_key else None
-    if model is None:
-        km = KMeans(
-            k=n_clusters, seed=seed, featuresCol="v", predictionCol="cell"
-        )
-        model = km.fit(unit)
-        if quantizer_key:
-            _IVF_QUANTIZERS[quantizer_key] = model
-    corpus = model.transform(unit).select(
-        F.col(id_col).alias("cand_id"),
+    X = _unit_sample(df, id_col, vec_col, _IVF_SAMPLE)
+    cent = _lloyd(X, n_clusters, _IVF_ITERS, np.random.default_rng(seed))
+    corpus = pq_encode(df, cent[None], id_col, vec_col).select(
+        F.col("id").alias("cand_id"),
         F.col("uv").alias("cand_vec"),
-        "cell",
+        # non-nullable: the join's inferred isnotnull(cell) then folds
+        # away instead of becoming a second encode pass over the corpus
+        F.coalesce(F.col("codes")[0], F.lit(-1)).alias("cell"),
     )
 
     # centroid table: tiny (n_clusters × dim) — built driver-side, broadcast.
     centroids = local_df(df.sparkSession, 
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
+        [(i, [float(x) for x in c]) for i, c in enumerate(cent)],
         "cell int, centroid array<double>",
     )
 
     # probe list: rank cells per query by cosine to centroid, keep n_probe.
-    q = model.transform(
-        unit.filter(F.col(id_col) < n_queries)
-    ).select(F.col(id_col).alias("query_id"), F.col("uv").alias("query_vec"))
+    q = df.filter(F.col(id_col) < n_queries).select(
+        F.col(id_col).alias("query_id"), unit_normalize(vec_col).alias("query_vec")
+    )
     w_cell = Window.partitionBy("query_id").orderBy(
         F.desc("c_cos"), F.asc("cell")
     )
@@ -2048,9 +2079,6 @@ def pack_sequences(
 # --------------------------------------------------------------------------
 # K3: product quantization (PQ) — the compression-maximal ANN path
 # --------------------------------------------------------------------------
-_PQ_CODEBOOKS: dict[str, "np.ndarray"] = {}
-
-
 def pq_train_codebooks(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -2059,48 +2087,30 @@ def pq_train_codebooks(
     sample_n: int = 2000,
     iters: int = 12,
     seed: int = 42,
+    id_col: str = "vec_id",
 ) -> "np.ndarray":
     """Train PQ codebooks (Jégou, Douze & Schmid, "Product Quantization
     for Nearest Neighbor Search", TPAMI 2011): split the dimension into
-    ``m`` subspaces and run Lloyd's k-means with ``2**nbits`` centroids
+    ``m`` subspaces and run :func:`_lloyd` with ``2**nbits`` centroids
     per subspace, on unit-normalized vectors.
 
     Training reads a BOUNDED deterministic sample (first ``sample_n``
-    ids) to the driver — at 100 TB the codebook is a built-once stored
-    artifact (like the IVF coarse quantizer), never refit per query; the
-    corpus itself is never collected. Deterministic: seeded centroid
-    init (first distinct points under a seeded permutation), fixed
-    iteration count, ties broken by lowest centroid index.
+    ids, :func:`_unit_sample`) to the driver in one collect; the corpus
+    itself is never collected. Nothing is cached: a fresh train is that
+    collect plus tens of milliseconds of numpy, so a table rewritten at
+    the same path is always read afresh. Deterministic: one seeded
+    generator gives each subspace its permutation start in turn.
 
     Returns ``(m, 2**nbits, dim//m)`` float64 codebooks.
     """
-    from time_series_spark_spark.functions.vectors import unit_normalize
-
-    rows = (
-        df.select(F.col("vec_id").alias("id"), unit_normalize(vec_col).alias("uv"))
-        .orderBy("id")
-        .limit(sample_n)
-        .collect()
-    )
-    X = np.asarray([r["uv"] for r in rows], dtype=np.float64)
-    n, dim = X.shape
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub, ksub = dim // m, 1 << nbits
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, ksub, dsub))
-    for j in range(m):
-        sub = X[:, j * dsub : (j + 1) * dsub]
-        cent = sub[rng.permutation(n)[:ksub]].copy()
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(ksub):
-                mask = assign == c
-                if mask.any():
-                    cent[c] = sub[mask].mean(axis=0)
-        books[j] = cent
-    return books
+    X = _unit_sample(df, id_col, vec_col, sample_n)
+    if X.shape[1] % m:
+        raise ValueError(f"dim {X.shape[1]} not divisible by m={m}")
+    dsub, rng = X.shape[1] // m, np.random.default_rng(seed)
+    return np.stack([
+        _lloyd(X[:, j * dsub : (j + 1) * dsub], 1 << nbits, iters, rng)
+        for j in range(m)
+    ])
 
 
 def pq_encode(
@@ -2122,9 +2132,6 @@ def pq_encode(
 
     books = codebooks
     m, ksub, dsub = books.shape
-    # ||x - c||² = ||x||² - 2<x,c> + ||c||²; per-subspace argmin needs
-    # only the cross term and ||c||² (the ||x||² row-constant drops out)
-    cnorm2 = (books**2).sum(axis=2)  # (m, ksub)
 
     @F.pandas_udf("array<int>")
     def encode(uv: pd.Series) -> pd.Series:
@@ -2132,9 +2139,7 @@ def pq_encode(
         b = X.shape[0]
         codes = np.empty((b, m), dtype=np.int32)
         for j in range(m):
-            sub = X[:, j * dsub : (j + 1) * dsub]
-            scores = cnorm2[j][None, :] - 2.0 * (sub @ books[j].T)
-            codes[:, j] = scores.argmin(axis=1)
+            codes[:, j] = _nearest(X[:, j * dsub : (j + 1) * dsub], books[j])
         return pd.Series(list(codes))
 
     return df.select(
@@ -2151,34 +2156,24 @@ def pq_topk(
     m: int = 8,
     nbits: int = 8,
     refine_factor: int = 4,
-    codebook_key: str | None = None,
 ) -> DataFrame:
     """PQ asymmetric-distance (ADC) cosine top-k with exact rescoring.
 
-    Candidate generation never touches float vectors: each query builds
-    an ``(m × 2**nbits)`` lookup table of subspace dot products against
-    the codebooks, and a candidate's approximate dot is the sum of its
-    ``m`` table lookups. Here that gather-sum runs entirely JVM-side:
-    corpus codes posexplode to ``m`` rows/vector, equi-join the
-    BROADCAST LUT rows on (subspace, code) — n_queries·m·2**nbits tiny
-    rows — and re-aggregate per (query, candidate). Top ``k·refine``
-    by approximate dot are rescored with exact float cosine via a
-    broadcast candidate semi-join (same tail as :func:`sq8_topk`; the
-    float table never shuffles). At extreme scale the explode feeds a
-    partial per-partition top-k before the global window.
+    The codebooks are trained on every call by :func:`pq_train_codebooks`
+    (first 2000 ``id_col`` values, one bounded collect) and cached
+    nowhere. Candidate generation never touches float vectors: each query
+    builds an ``(m × 2**nbits)`` lookup table of subspace dot products
+    against the codebooks, and a candidate's approximate dot is the sum of
+    its ``m`` table lookups, computed JVM-side as one higher-order
+    aggregate over the broadcast LUT rows — a map-only stage. Top
+    ``k·refine`` by approximate dot are rescored with exact float cosine
+    via a broadcast candidate semi-join (same tail as :func:`sq8_topk`;
+    the float table never shuffles).
 
     Output: (query_id, cand_id, cos, rk) — same contract as the other
     ANN paths; recall vs exact pinned in tests.
     """
-    import pandas as pd
-
-    from time_series_spark_spark.functions.vectors import cosine
-
-    books = _PQ_CODEBOOKS.get(codebook_key) if codebook_key else None
-    if books is None:
-        books = pq_train_codebooks(df, vec_col, m=m, nbits=nbits)
-        if codebook_key:
-            _PQ_CODEBOOKS[codebook_key] = books
+    books = pq_train_codebooks(df, vec_col, m=m, nbits=nbits, id_col=id_col)
     _, ksub, dsub = books.shape
 
     enc = pq_encode(df, books, id_col, vec_col)

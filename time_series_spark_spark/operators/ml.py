@@ -2,7 +2,7 @@
 
 The reference's driver category is "ML-lib" (BASELINE.json:5 — "MLlib +
 UDFs for Prophet forecasting over partitioned time-series"); the engine
-already uses MLlib for the IVF coarse quantizer (KMeans) and MinHash
+already uses MLlib for series-shape clustering (KMeans) and MinHash
 LSH. This module adds the supervised half of that surface: a
 feature-assembly → estimator → evaluation pipeline, built the idiomatic
 way (`VectorAssembler` + `StandardScaler` + `LogisticRegression` inside

@@ -503,16 +503,15 @@ def emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_ivf_topk",
-    None,  # KMeans cells are engine-specific → rows-only; recall vs exact in pytest
-    doc="K3 ANN scale path #2: IVF — KMeans coarse quantizer, broadcast "
-    "probe list, exact cosine rerank inside probed cells only",
+    None,  # quantizer cells are engine-specific → rows-only; recall vs exact in pytest
+    doc="K3 ANN scale path #2: IVF — Lloyd coarse quantizer (the PQ "
+    "kernel with one subspace) on a bounded 2000-vector sample, cells "
+    "assigned in one Arrow pass, broadcast probe list, exact cosine "
+    "rerank inside probed cells only",
 )
 def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(
-        load(spark, sf_dir, "embeddings"),
-        k=5,
-        n_queries=10,
-        quantizer_key=f"embeddings:{sf_dir}",
+        load(spark, sf_dir, "embeddings"), k=5, n_queries=10
     ).orderBy("query_id", "rk")
 
 
@@ -1595,18 +1594,15 @@ def docs_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vs exact + compression invariants asserted in tests/test_llm.py
     doc="K3 ANN scale path #4: product quantization (Jegou et al., TPAMI "
     "2011) — 64-dim vectors encode to 8 byte-codes (32x smaller than "
-    "float32); asymmetric-distance candidate scoring runs JVM-side as "
-    "posexplode + broadcast-LUT equi-join + re-aggregate (no float "
-    "vector is touched until the top k*4 exact-cosine rescore)",
+    "float32); codebooks are refit per call on a 2000-vector sample; "
+    "asymmetric-distance scoring is one JVM aggregate over a broadcast "
+    "LUT (no float vector is touched until the top k*4 exact rescore)",
 )
 def emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from time_series_spark_spark.operators.llm import pq_topk
 
     return pq_topk(
-        load(spark, sf_dir, "embeddings"),
-        k=5,
-        n_queries=10,
-        codebook_key=f"pq:{sf_dir}",
+        load(spark, sf_dir, "embeddings"), k=5, n_queries=10
     ).orderBy("query_id", "rk")
 
 
@@ -1913,9 +1909,9 @@ def emb_ann_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_exact = exact.count()
     methods = {
         "srp_lsh": srp_lsh_topk(emb, k=5, n_queries=10),
-        "ivf": ivf_topk(emb, k=5, n_queries=10, quantizer_key=f"ivfq:{sf_dir}"),
+        "ivf": ivf_topk(emb, k=5, n_queries=10),
         "sq8": sq8_topk(emb, k=5, n_queries=10),
-        "pq": pq_topk(emb, k=5, n_queries=10, codebook_key=f"pqq:{sf_dir}"),
+        "pq": pq_topk(emb, k=5, n_queries=10),
     }
     rows = []
     for name, df in methods.items():

@@ -291,7 +291,7 @@ def user_value_stats_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "VectorAssembler -> StandardScaler -> LogisticRegression in a "
     "Pipeline, time-based train/test split, ROC-AUC via "
     "BinaryClassificationEvaluator; completes the reference's 'MLlib' "
-    "surface (KMeans/IVF and MinHashLSH already in use) with the "
+    "surface (KMeans shape clustering and MinHashLSH already in use) with the "
     "estimator/evaluator half",
 )
 def ml_purchase_propensity(spark: SparkSession, sf_dir: str) -> DataFrame:
